@@ -102,7 +102,7 @@ def ensure_dedup_index(
         from dataqualitycontroltool_spark.graft.pipeline import hamming_dedup_index
 
         df = read_corpus(spark, in_path)
-        if getattr(cfg, "dedupe_hamming", 0) > 0:
+        if cfg.dedupe_hamming > 0:
             idx = hamming_dedup_index(df, cfg.dedupe_on, cfg.dedupe_hamming)
         else:
             idx = dedup_index(df, cfg.dedupe_on)

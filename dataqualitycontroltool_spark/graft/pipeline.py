@@ -127,7 +127,7 @@ def run_pipeline(
     if cfg.dedupe_on:
         if dedup is not None:
             idx = dedup
-        elif getattr(cfg, "dedupe_hamming", 0) > 0:
+        elif cfg.dedupe_hamming > 0:
             idx = hamming_dedup_index(df, cfg.dedupe_on, cfg.dedupe_hamming)
         else:
             idx = dedup_index(df, cfg.dedupe_on)

@@ -11,9 +11,10 @@ the standard family, each designed around Spark's shuffle model:
   combine; the fingerprint is computed scan-side so only 16 bytes shuffle,
   never the payload).
 * **MinHash + LSH** — per-row signature (no shuffle), band keys, candidate
-  generation via a self-equi-join on (band, key) — the join keys are md5
-  digests, so they are uniformly distributed and skew-free by construction —
-  then exact-Jaccard verification only on the candidate set.
+  generation via a self-equi-join on (band, key) — md5 digests, uniform
+  across distinct shingle sets, but a templated near-dup cluster collapses
+  onto one key, so the join is the skew-safe salt grid shared with the
+  hamming index — then exact-Jaccard verification only on the candidate set.
 * **SimHash** — per-row 60-bit fingerprint computed entirely inside Catalyst
   lambda expressions (no UDF, no shuffle); near-dup pairs via banded
   equi-join.  With ``bands`` bands of width ``w``, any pair with hamming
@@ -34,10 +35,13 @@ are rounded to 6 decimals before thresholding/ranking.
 
 from __future__ import annotations
 
+import logging
 from functools import reduce
-from operator import add
+from operator import add, and_
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
+
+logger = logging.getLogger(__name__)
 
 # --------------------------------------------------------------------------
 # tokenization / shingling (shared with textstats)
@@ -174,7 +178,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     k: int = 3,
     hot_bucket_threshold: int = 8192,
-    detect_sample: float = 0.05,
 ) -> DataFrame:
     """Near-duplicate pairs via banded MinHash-LSH, verified with exact
     Jaccard: (id_a, id_b, jaccard) with jaccard >= threshold.
@@ -192,9 +195,11 @@ def minhash_lsh_pairs(
     large templated near-dup cluster agreeing on all r minima) collapse
     onto one band key, and that bucket's O(n²) candidate enumeration would
     serialize into a single shuffle partition (kilobytes of input hiding
-    quadratic work — AQE's byte-sized skew split never fires).  Buckets
-    over ``hot_bucket_threshold`` entries therefore take the same exact
-    salt-grid self-join as the hamming index (`_skew_safe_self_pairs`)."""
+    quadratic work — AQE's byte-sized skew split never fires).  The band
+    join is therefore the same lazy salt-grid self-join as the hamming
+    index (`_skew_safe_self_pairs`): buckets over ``hot_bucket_threshold``
+    entries spread over a grid of cells, the rest join plainly, all in one
+    plan that runs no Spark job until the caller's action."""
     rows_per_band = num_hashes // bands
     # The signature subplan is referenced by both sides of the band self-join
     # (and the shingle table again by the verifier), so Catalyst recomputes
@@ -214,7 +219,6 @@ def minhash_lsh_pairs(
             F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
         ),
         hot_bucket_threshold=hot_bucket_threshold,
-        detect_sample=detect_sample,
     ).distinct()
     sh = shingle_table(df, id_col, text_col, k)
     return _verified_jaccard(sh, id_col, cand, threshold)
@@ -532,17 +536,15 @@ def simhash_pairs(
       scan runs once per branch (pure CPU, embarrassingly parallel).
       Prefer this at 10^12 rows, where pinning H bytes/doc across the
       cluster costs more than recomputing a hash scan, together with the
-      ``token_hash='xxhash64'`` fast path."""
+      ``token_hash='xxhash64'`` fast path.
+
+    Skewed band buckets go through banded_hamming_pairs' lazy salt grid,
+    so neither mode runs a Spark job before the caller's action: there is
+    no build-time hot-bucket detection pass to pay for, sampled or not."""
     sh = simhash_table(df, id_col, text_col, token_hash)
     if cache:
         sh = sh.persist()
-    # with cache=False the simhash expression recomputes per plan branch —
-    # sample the hot-bucket detection pass so it costs ~5% of a scan, not a
-    # full extra fingerprint computation (cached frames keep exact counts)
-    return banded_hamming_pairs(
-        sh, id_col, "simhash", max_hamming, bands, SIMHASH_BITS,
-        detect_sample=1.0 if cache else 0.05,
-    )
+    return banded_hamming_pairs(sh, id_col, "simhash", max_hamming, bands, SIMHASH_BITS)
 
 
 def banded_hamming_pairs(
@@ -553,7 +555,6 @@ def banded_hamming_pairs(
     bands: int = 4,
     bits: int = 64,
     hot_bucket_threshold: int = 8192,
-    detect_sample: float = 1.0,
 ) -> DataFrame:
     """Pairs of rows whose integer fingerprints differ in <= max_hamming
     bits: (id_a, id_b, hamming) — works for ANY int64 fingerprint column
@@ -573,18 +574,20 @@ def banded_hamming_pairs(
     one core of 16 while the rest idle; a 10^6-row hot band at corpus scale
     is hours).  Real phash corpora do this: smooth images share the
     low-frequency DCT signs, saturating one band value (the north-star's
-    "salted repartitioning to defuse phash skew").  Buckets with more than
-    ``hot_bucket_threshold`` entries therefore take a salt-GRID self-join:
-    rows split into S = ceil(n_max/threshold) (≤32) salt groups by
-    xxhash64(id); the left side replicates to cells (s_a, j), j<S, the
-    right side to cells (i, s_b), i<S, and the equi-join on the full cell
-    key lands every ordered pair in EXACTLY ONE of the S² cells — same
-    pairs, S× shuffle volume for the hot entries only, work spread over S²
-    tasks instead of 1.  Cold buckets keep the plain join; detection is a
-    map-side-combined count over the (small) band frame, and the grid leg
-    is built only when a hot bucket actually exists (one bounded driver
-    action on the aggregated bucket-count frame).  Exactness is pinned by
-    a pytest comparing salted vs plain output on a forced-hot corpus."""
+    "salted repartitioning to defuse phash skew").  The band self-join is
+    therefore ONE lazy salt-GRID plan that every bucket takes: a window
+    count gives each row its bucket size n; a bucket with more than
+    ``hot_bucket_threshold`` entries gets S = ceil(n/threshold) salt
+    groups (clamped to [8, 32]) by xxhash64(id), every other bucket S = 1.
+    The left side replicates to cells (s_a, j), j<S, the right side to
+    cells (i, s_b), i<S, and the equi-join on the full cell key lands every
+    ordered pair in EXACTLY ONE of the S² cells — same pairs, S× shuffle
+    volume for the hot entries only, work spread over S² tasks instead of
+    1; a cold bucket (S = 1) is the plain join.  Nothing runs at build
+    time: no detection pass, no sampling, no driver action.
+    ``hot_bucket_threshold=0`` gives every bucket S = 1.  Exactness is
+    pinned by a pytest comparing salted vs plain output on a forced-hot
+    corpus, with buckets on both sides of the threshold."""
     if max_hamming > bands - 1:
         raise ValueError("banded hamming join is only exact for max_hamming <= bands-1")
     width = bits // bands
@@ -614,8 +617,7 @@ def banded_hamming_pairs(
         )
 
     return _skew_safe_self_pairs(
-        bl, ("band", "bkey"), id_col, pair_select, hot_bucket_threshold,
-        detect_sample,
+        bl, ("band", "bkey"), id_col, pair_select, hot_bucket_threshold
     ).distinct()
 
 
@@ -625,90 +627,41 @@ def _skew_safe_self_pairs(
     id_col: str,
     pair_select,
     hot_bucket_threshold: int,
-    detect_sample: float = 1.0,
 ) -> DataFrame:
-    """Self-join ``bl`` on equal ``key_cols`` with ``a.id < b.id``, routing
-    buckets over ``hot_bucket_threshold`` entries through an EXACT salt-grid
-    (see banded_hamming_pairs) so their quadratic candidate work spreads
-    over s² tasks instead of serializing into the hot key's single shuffle
+    """Self-join ``bl`` on equal ``key_cols`` with ``a.id < b.id`` through
+    ONE lazy salt-grid plan that every bucket takes (see
+    banded_hamming_pairs), so a hot bucket's quadratic candidate work
+    spreads over s² tasks instead of serializing into its single shuffle
     partition.  ``pair_select`` maps the aliased (a, b) join to the output
-    columns.  Shared by the hamming AND MinHash-LSH band joins — any
-    banded self-join has this failure mode (kilobytes of input hiding
-    quadratic work, invisible to AQE's byte-sized skew split)."""
+    columns.  Shared by the hamming AND MinHash-LSH band joins — any banded
+    self-join has this failure mode (kilobytes of input hiding quadratic
+    work, invisible to AQE's byte-sized skew split).
+
+    The grid floor of 8 makes the s² ≥ 64 cells outnumber the shuffle
+    parallelism.  Every cell key is bigint on both sides: a mixed
+    int/bigint key makes Spark cast it and add an AQE-coalescable
+    exchange per side."""
     key_cols = list(key_cols)
-    bucket_eq = None
-    for c in key_cols:
-        eq = F.col(f"a.{c}") == F.col(f"b.{c}")
-        bucket_eq = eq if bucket_eq is None else (bucket_eq & eq)
-    id_lt = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-
-    if not 0.0 < detect_sample <= 1.0:
-        raise ValueError(
-            "detect_sample must be in (0, 1]; disable detection with "
-            "hot_bucket_threshold=0"
-        )
-
-    hot_rows = []
     if hot_bucket_threshold:
-        # the counts aggregate recomputes bl's upstream once more —
-        # deliberately NOT localCheckpoint'd: the eager barrier serializes
-        # the caller's one-shot pipeline (gotcha: measured +3.3s on the 8k
-        # graft) and grows the persistent-RDD set callers with cache=False
-        # contracts forbid.  When that upstream is EXPENSIVE (the MinHash
-        # signature pipeline — measured +35-90% on the LSH query family at
-        # detect_sample=1), detection instead runs on a deterministic
-        # id-hash sample of bl: a catastrophically hot bucket (the one that
-        # costs hours) is unmissable in a 5% sample, a borderline one
-        # (~threshold-sized, single-digit seconds of serialized work) may
-        # be missed — the right trade.  The 0.5 safety factor keeps the
-        # binomial thinning's lower tail from hiding true-hot buckets; at
-        # detect_sample=1 the counts are exact, so the raw threshold
-        # applies unmodified.
-        probe, rate = bl, 1.0
-        if detect_sample < 1.0:
-            mod = max(2, int(round(1.0 / detect_sample)))
-            rate = 1.0 / mod  # the ACTUAL sample rate, not the requested one
-            probe = bl.where(F.pmod(F.xxhash64(F.col(id_col)), F.lit(mod)) == 0)
-        counts = probe.groupBy(*key_cols).count()
-        cutoff = (hot_bucket_threshold if rate == 1.0
-                  else max(1, int(hot_bucket_threshold * rate * 0.5)))
-        # bounded driver action: the aggregated frame has one row per hot
-        # bucket, and "hot" is by definition rare (a corpus where MANY
-        # buckets are hot has degenerate fingerprints, not a skew problem)
-        hot_rows = (
-            counts.where(F.col("count") > cutoff)
-            .orderBy(F.desc("count")).limit(1000).collect()
+        # a column, not an inline expression: salt and cell both read it,
+        # and an inlined window count is evaluated once per reference
+        bl = bl.withColumn(
+            "cnt", F.count(F.lit(1)).over(Window.partitionBy(*key_cols))
         )
-
-    if not hot_rows:
-        a, b = bl.alias("a"), bl.alias("b")
-        return pair_select(a.join(b, bucket_eq & id_lt))
-
-    n_max = int(max(r["count"] for r in hot_rows) / rate)
-    # grid size: enough salt groups that (a) each group stays under the
-    # threshold and (b) the s² cells exceed ~2× the shuffle parallelism so
-    # the quadratic work actually spreads (measured on a 20k-entry hot
-    # band, 16 cores: s=3 → 3.2s, s=10 → 2.3s, unsalted 6.3s)
-    s = min(32, max(-(-n_max // hot_bucket_threshold), 8))
-    # the hot keys are already on the driver (≤1000 rows) — rebuild the
-    # broadcast side from them instead of re-executing the counts plan
-    # (whose upstream may be the full signature pipeline) a second time.
-    # More than 1000 hot buckets means degenerate fingerprints, not skew;
-    # the hottest 1000 get the grid, the rest stay on the (still correct)
-    # plain path.
-    key_schema = counts.select(*key_cols).schema
-    hot_keys = F.broadcast(
-        bl.sparkSession.createDataFrame(
-            [[r[c] for c in key_cols] for r in hot_rows], key_schema
-        )
+        s = F.when(
+            F.col("cnt") > hot_bucket_threshold,
+            F.least(
+                F.lit(32),
+                F.greatest(F.lit(8), F.ceil(F.col("cnt") / hot_bucket_threshold)),
+            ),
+        ).otherwise(1).cast("long")
+    else:
+        s = F.lit(1).cast("long")
+    grid = (
+        bl.withColumn("salt", F.pmod(F.xxhash64(F.col(id_col)), s))
+        .withColumn("cell", F.explode(F.sequence(F.lit(0).cast("long"), s - 1)))
+        .drop("cnt")
     )
-    cold = bl.join(hot_keys, key_cols, "left_anti")
-    hot_bl = bl.join(hot_keys, key_cols, "left_semi").withColumn(
-        "salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(s))
-    )
-    grid = F.explode(F.array(*[F.lit(j) for j in range(s)]))
-    left = hot_bl.withColumn("cell_j", grid)   # occupies cells (salt, j)
-    right = hot_bl.withColumn("cell_i", grid)  # occupies cells (i, salt)
     # EXPLICIT-N repartition by the cell keys, both sides in join-key order:
     # co-partitioned, so the join adds no exchange of its own — and a
     # user-specified partition count is exempt from AQE partition
@@ -719,21 +672,18 @@ def _skew_safe_self_pairs(
         nparts = int(bl.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     except ValueError:  # e.g. "auto" on AQE-managed deployments
         nparts = bl.sparkSession.sparkContext.defaultParallelism
-    left = left.repartition(nparts, *key_cols, "salt", "cell_j")
-    right = right.repartition(nparts, *key_cols, "cell_i", "salt")
-    a, b = cold.alias("a"), cold.alias("b")
-    cold_pairs = pair_select(a.join(b, bucket_eq & id_lt))
-    a, b = left.alias("a"), right.alias("b")
-    hot_pairs = pair_select(
+    a = grid.repartition(nparts, *key_cols, "salt", "cell").alias("a")
+    b = grid.repartition(nparts, *key_cols, "cell", "salt").alias("b")
+    cond = reduce(and_, [F.col(f"a.{c}") == F.col(f"b.{c}") for c in key_cols])
+    return pair_select(
         a.join(
             b,
-            bucket_eq
-            & (F.col("a.salt") == F.col("b.cell_i"))
-            & (F.col("a.cell_j") == F.col("b.salt"))
-            & id_lt,
+            cond
+            & (F.col("a.salt") == F.col("b.cell"))
+            & (F.col("a.cell") == F.col("b.salt"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
     )
-    return cold_pairs.unionByName(hot_pairs)
 
 
 # --------------------------------------------------------------------------
@@ -744,6 +694,11 @@ def _skew_safe_self_pairs(
 # ~3× in bit-length per round (see connected_components docstring), so a
 # reset every 6 rounds bounds them at 3^6 ≈ 729 × the parquet file-size bits.
 _STATS_RESET_EVERY = 6
+# without a reset (a cluster with no checkpoint dir) the carried stats are
+# harmless for the first rounds; the driver-side stats product was measured
+# running for minutes by round ~17 and overflowing by ~20, so a loop that
+# has not converged after this many rounds fails instead.
+_UNRESET_ROUND_LIMIT = 16
 
 
 def _reliable_reset(df: DataFrame, spill_root: str, rnd: int) -> DataFrame:
@@ -763,9 +718,10 @@ def _spill_root(pairs: DataFrame) -> tuple[str, bool]:
     session checkpoint dir when the deployment set one (shared storage on
     a real cluster); falls back to a driver-local tempdir ONLY on local
     masters — on a cluster a driver-local path would scatter task files
-    across executor disks and silently lose the frame on re-read, so the
-    missing checkpoint dir is an error there.  A uuid component keeps
-    concurrent runs sharing one checkpoint dir from clobbering each
+    across executor disks and silently lose the frame on re-read, so
+    there the directory is ``""`` (skip the reset) and a warning says the
+    loop will fail at round ``_UNRESET_ROUND_LIMIT``.  A uuid component
+    keeps concurrent runs sharing one checkpoint dir from clobbering each
     other's round files."""
     import tempfile
     import uuid
@@ -778,11 +734,13 @@ def _spill_root(pairs: DataFrame) -> tuple[str, bool]:
             False,
         )
     if not sc.master.startswith("local"):
-        raise RuntimeError(
-            "connected_components needs a shared checkpoint directory on a "
-            "cluster (sc.setCheckpointDir(...)): the periodic stats-reset "
-            "spill must be readable by the driver and every executor"
+        logger.warning(
+            "connected_components: no checkpoint directory on a cluster "
+            "(sc.setCheckpointDir(...)); skipping the stats-reset spill, so "
+            "a graph still unconverged after %d rounds fails",
+            _UNRESET_ROUND_LIMIT,
         )
+        return "", False
     return tempfile.mkdtemp(prefix="dqc_cc_spill_"), True
 
 
@@ -821,7 +779,10 @@ def connected_components(
     (honoring ``sc.setCheckpointDir`` when set — at cluster scale that is
     also the fault-tolerance story: localCheckpoint dies with an executor),
     which resets the carried stats to the file size.  Worst-case carried
-    magnitude is then 3^k·file_bits — microseconds, forever."""
+    magnitude is then 3^k·file_bits — microseconds, forever.  On a
+    cluster with no checkpoint dir there is nowhere shared to spill: the
+    reset is skipped with a warning, and only a loop that reaches round
+    ``_UNRESET_ROUND_LIMIT`` (16) unconverged raises."""
     edges = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
     sym = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     sym = sym.distinct().localCheckpoint()
@@ -870,9 +831,16 @@ def connected_components(
         labels.agg(F.sum(F.col("comp").cast("decimal(38,0)"))).collect()[0][0]
         if integral_ids else None
     )
-    spill_root, spill_is_local = None, False
+    spill_root, spill_is_local = None, False  # resolved at the first reset
     try:
         for rnd in range(max_iter):
+            if rnd >= _UNRESET_ROUND_LIMIT and spill_root == "":
+                raise RuntimeError(
+                    "connected_components needs a shared checkpoint directory "
+                    "on a cluster (sc.setCheckpointDir(...)) past "
+                    f"{_UNRESET_ROUND_LIMIT} rounds: the periodic stats-reset "
+                    "spill must be readable by the driver and every executor"
+                )
             neighbor_min = (
                 sym.join(labels, sym.dst == labels.id)
                 .groupBy("src")
@@ -935,7 +903,8 @@ def connected_components(
                 # are disposable the moment the round completes.
                 if spill_root is None:
                     spill_root, spill_is_local = _spill_root(pairs)
-                new_labels = _reliable_reset(new_labels, spill_root, rnd)
+                if spill_root:
+                    new_labels = _reliable_reset(new_labels, spill_root, rnd)
             new_labels = new_labels.localCheckpoint()
             done, prev_sum = unchanged(new_labels, labels, prev_sum)
             labels = new_labels

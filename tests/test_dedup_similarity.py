@@ -213,15 +213,10 @@ def test_connected_components_long_chain_converges(spark):
     assert {r.comp for r in comps.collect()} == {0}
 
 
-def test_banded_hamming_hot_bucket_salting_exact(spark):
-    """r5: a (band, bkey) bucket over hot_bucket_threshold entries takes a
-    salt-grid self-join (every ordered pair lands in exactly ONE of the s²
-    cells) so the quadratic candidate work spreads across tasks instead of
-    serializing into the hot key's single shuffle partition.  The grid must
-    be EXACT: same pair set as the plain join, no duplicates, no misses —
-    pinned here on a corpus whose band 0 is constant (every row in one
-    bucket, the phash-skew smell the north star names) with genuine 1-bit
-    near-duplicates scattered through the other bands."""
+def _forced_hot_corpus(spark):
+    """(id, fp) whose band 0 is constant for ~450 rows (one hot bucket)
+    with 1-bit near-duplicates in the other bands, plus band-0 buckets of
+    exactly 64 and 65 entries, the two sides of hot_bucket_threshold=64."""
     import numpy as np
 
     rng = np.random.default_rng(11)
@@ -231,7 +226,37 @@ def test_banded_hamming_hot_bucket_salting_exact(spark):
         fps.append(int(f))
         if rng.random() < 0.5:
             fps.append(int(f ^ (1 << int(rng.integers(16, 60)))))
-    df = spark.createDataFrame(list(enumerate(fps)), "id bigint, fp bigint")
+    # threshold boundary: s = 1 (the plain join) at 64 entries, s = 8 at
+    # 65, each bucket holding 16 1-bit near-dup pairs
+    for band0, n_single in ((0x0ABC, 32), (0x0DEF, 33)):
+        for f in (rng.integers(0, 2**40, n_single, dtype=np.int64) << 16) | band0:
+            fps.append(int(f))
+        for f in (rng.integers(0, 2**40, 16, dtype=np.int64) << 16) | band0:
+            fps += [int(f), int(f ^ (1 << int(rng.integers(16, 60))))]
+    return spark.createDataFrame(list(enumerate(fps)), "id bigint, fp bigint")
+
+
+def _templated_cluster_corpus(spark):
+    """120 copies of one template (one LSH band key per band) + 40 uniques."""
+    rows = [(i, "the same boilerplate template text body") for i in range(120)]
+    rows += [(1000 + i, f"unique document number {i} with its own words {i*7}")
+             for i in range(40)]
+    return spark.createDataFrame(rows, "id bigint, text string")
+
+
+def test_banded_hamming_hot_bucket_salting_exact(spark):
+    """r5: a (band, bkey) bucket over hot_bucket_threshold entries takes a
+    salt-grid self-join (every ordered pair lands in exactly ONE of the s²
+    cells) so the quadratic candidate work spreads across tasks instead of
+    serializing into the hot key's single shuffle partition.  The grid must
+    be EXACT: same pair set as the plain join, no duplicates, no misses —
+    pinned here on a corpus whose band 0 is constant for most rows (one
+    bucket, the phash-skew smell the north star names) with genuine 1-bit
+    near-duplicates scattered through the other bands, plus buckets at and
+    just over the threshold."""
+    import itertools
+
+    df = _forced_hot_corpus(spark)
     plain = sorted(
         tuple(r)
         for r in dedup.banded_hamming_pairs(
@@ -247,6 +272,23 @@ def test_banded_hamming_hot_bucket_salting_exact(spark):
     assert plain == salted and len(plain) > 50
     assert len(set(plain)) == len(plain)
 
+    # the grid itself, before the callers' distinct(): every pair of a
+    # bucket exactly once on both sides of the threshold (64 → s = 1,
+    # 65 → s = 8, 300 → s = 8), and never a pair across buckets
+    ids = {"at": range(1000, 1064), "over": range(2000, 2065),
+           "hot": range(3000, 3300)}
+    bl = spark.createDataFrame(
+        [(k, i) for k, r in ids.items() for i in r], "k string, id bigint"
+    )
+    grid = dedup._skew_safe_self_pairs(
+        bl, ("k",), "id",
+        lambda j: j.select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")),
+        hot_bucket_threshold=64,
+    )
+    got = sorted(tuple(r) for r in grid.collect())
+    want = sorted(p for r in ids.values() for p in itertools.combinations(r, 2))
+    assert got == want
+
 
 def test_minhash_lsh_hot_cluster_salting_exact(spark):
     """r5: a large templated near-dup cluster agrees on all r minima, so
@@ -254,10 +296,7 @@ def test_minhash_lsh_hot_cluster_salting_exact(spark):
     bucket (the docstring's old 'md5 keys are uniform → no skew' claim was
     wrong for exactly this case).  The salt-grid route must return the
     identical verified-pair set as the plain join."""
-    rows = [(i, "the same boilerplate template text body") for i in range(120)]
-    rows += [(1000 + i, f"unique document number {i} with its own words {i*7}")
-             for i in range(40)]
-    df = spark.createDataFrame(rows, "id bigint, text string")
+    df = _templated_cluster_corpus(spark)
     plain = sorted(
         tuple(r)
         for r in dedup.minhash_lsh_pairs(df, "id", "text",
@@ -266,11 +305,66 @@ def test_minhash_lsh_hot_cluster_salting_exact(spark):
     salted = sorted(
         tuple(r)
         for r in dedup.minhash_lsh_pairs(
-            df, "id", "text", hot_bucket_threshold=40, detect_sample=1.0
+            df, "id", "text", hot_bucket_threshold=40
         ).collect()
     )
     assert plain == salted and len(plain) >= 120 * 119 // 2
     assert len(set(plain)) == len(plain)
+
+
+def _plan_nodes(plan: str) -> list:
+    """(depth, text) per line of a physical-plan tree string."""
+    import re
+
+    nodes = []
+    for line in plan.splitlines():
+        lead = len(re.match(r"[ :+\-]*", line).group())
+        nodes.append((lead // 3, re.sub(r"^\*\(\d+\) ", "", line[lead:])))
+    return nodes
+
+
+def _children(nodes: list, i: int) -> list:
+    depth, out = nodes[i][0], []
+    for j in range(i + 1, len(nodes)):
+        if nodes[j][0] <= depth:
+            break
+        if nodes[j][0] == depth + 1:
+            out.append(j)
+    return out
+
+
+def test_band_self_joins_are_lazy_with_two_grid_exchanges(spark):
+    """Building the hamming and MinHash-LSH band joins on their forced-hot
+    corpora runs no Spark job (no hot-bucket detection at build time), and
+    the salt-grid join reads exactly the two explicit-N exchanges: every
+    cell key is bigint on both sides, so Spark adds no (AQE-coalescable)
+    ENSURE_REQUIREMENTS exchange of its own between them and the join."""
+    hot, docs = _forced_hot_corpus(spark), _templated_cluster_corpus(spark)
+    builds = {
+        "hamming": lambda: dedup.banded_hamming_pairs(
+            hot, "id", "fp", 3, hot_bucket_threshold=64),
+        "lsh": lambda: dedup.minhash_lsh_pairs(
+            docs, "id", "text", hot_bucket_threshold=40),
+    }
+    sc = spark.sparkContext
+    for name, build in builds.items():
+        group = f"lazy-band-join-{name}"
+        sc.setJobGroup(group, "build the band join without an action")
+        try:
+            plan = build()._jdf.queryExecution().executedPlan().toString()
+        finally:
+            sc.setJobGroup(None, None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+
+        assert plan.count("REPARTITION_BY_NUM") == 2, plan
+        nodes = _plan_nodes(plan)
+        join = next(i for i, (_, t) in enumerate(nodes)
+                    if "Join" in t and "salt" in t)
+        for side in _children(nodes, join):
+            while nodes[side][1].startswith("Sort "):
+                side = _children(nodes, side)[0]
+            assert nodes[side][1].startswith("Exchange "), (name, nodes[side])
+            assert "REPARTITION_BY_NUM" in nodes[side][1], (name, nodes[side])
 
 
 def test_connected_components_path_graph_crosses_stats_reset(spark):
@@ -307,6 +401,32 @@ def test_connected_components_spills_into_checkpoint_dir(spark):
     spill_base = os.path.join(ckpt, "dqc_cc_spill")
     # the uuid run-dir was deleted best-effort after the loop
     assert (not os.path.exists(spill_base)) or os.listdir(spill_base) == []
+
+
+def test_connected_components_cluster_without_checkpoint_dir(spark, monkeypatch, caplog):
+    """A cluster master with no checkpoint dir has nowhere shared to spill
+    the stats reset: the loop warns once, skips the reset and still
+    converges a graph that needs more than 6 rounds; only a loop that
+    reaches round 16 unconverged raises.  Plain propagation (jumps=0)
+    needs one round per hop, so path length sets the round count."""
+    import logging
+
+    sc = spark.sparkContext
+    monkeypatch.setattr(sc, "master", "spark://x:7077")
+    monkeypatch.setattr(sc, "getCheckpointDir", lambda: None)
+
+    def path(n):
+        return spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
+                                     "id_a long, id_b long")
+
+    with caplog.at_level(logging.WARNING, logger=dedup.__name__):
+        comps = dedup.connected_components(path(10), jumps=0)
+    assert {(r.comp, r["count"]) for r in comps.groupBy("comp").count().collect()} == {(0, 10)}
+    warned = [r for r in caplog.records if "checkpoint directory" in r.getMessage()]
+    assert len(warned) == 1
+
+    with pytest.raises(RuntimeError, match="checkpoint directory"):
+        dedup.connected_components(path(20), jumps=0)
 
 
 def test_blocked_cosine_rejects_string_ids(spark):
